@@ -23,13 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** (content, meta) schema for a media column. */
-  val MediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
-
   final case class MediaMeta(format: String, width: Int, height: Int, n_frames: Int)
   final case class MediaRow(media_id: Long, content: Array[Byte])
   final case class DecodedRow(media_id: Long, format: String, width: Int,

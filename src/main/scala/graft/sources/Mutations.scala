@@ -250,14 +250,24 @@ object Mutations {
     // survivors materialization → overwrite). Concurrent first actions over
     // the lazy checkpoint are safe: local-checkpoint materialization is a
     // cache-put race both jobs settle idempotently, and the batch is tiny
-    // by contract. Validation failures surface after both probes quiesce —
-    // nothing has been written yet.
+    // by contract. Failures — a probe job's or validation's — surface only
+    // after BOTH probes quiesce: rethrowing while the sibling job still runs
+    // would leave it racing the caller's retry (the MicroBatch.processBatch
+    // discipline). Nothing has been written yet.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val bF = Future(bAgg.head())
-    val tbF = Future(tbAgg.head())
-    val (b, tb) = (Await.result(bF, Duration.Inf), Await.result(tbF, Duration.Inf))
+    import scala.util.Try
+    val probes = Seq(Future(bAgg.head()), Future(tbAgg.head()))
+      .map(f => Try(Await.result(f, Duration.Inf)))
+    probes.flatMap(_.failed.toOption) match {
+      case first +: rest =>
+        // `ne`: both probes can surface one shared upstream throwable
+        rest.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
+    val Seq(b, tb) = probes.map(_.get)
     val nApplied = b.getLong(0)
     // empty batch: the sum() columns below are NULL over zero rows — bail
     // before touching them (public API; callers needn't pre-check isEmpty)

@@ -414,6 +414,32 @@ class MutationsSpec extends SparkSpec {
         "monotone-batch replay contract")
   }
 
+  test("mergeApply: a failing probe rethrows only after its sibling probe's job ended") {
+    val dir = tmpDir("mutprobe")
+    Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("user_id", "score", "cohort")
+      .write.mode("overwrite").partitionBy("cohort").parquet(dir)
+    // the batch-side validation probe compares an INT op column with the
+    // 'I'/'U'/'D' literals and fails while planning (ANSI cast); the
+    // table-side probe never reads `op`, and its broadcast of the batch keys
+    // runs the sleeping key column in a task (a range, not a local relation
+    // the optimizer would evaluate on the driver), so it is still running
+    // when its sibling fails
+    val slowKey = udf { (k: Long) => Thread.sleep(3000); k }
+    val changes = spark.range(1).select(slowKey(lit(2L)).as("user_id"),
+      lit(0L).as("score"), lit("b").as("cohort"), lit(1).as("op"))
+    val sc = spark.sparkContext
+    intercept[Exception] {
+      Mutations.mergeApply(spark, dir, changes, Seq("user_id"), opCol = "op",
+        partitionCol = "cohort", sortCols = Seq("user_id"))
+    }
+    // a leaked sibling may still be planning: give it time to submit its
+    // job, well inside that job's 3 s task
+    Thread.sleep(1000)
+    org.apache.spark.graftbridge.Bus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty,
+      "a probe job outlived the mergeApply call that started it")
+  }
+
   private def fileState2(dir: String, part: String): Set[(String, Long)] = {
     val d = new java.io.File(s"$dir/$part")
     if (!d.exists()) Set.empty
